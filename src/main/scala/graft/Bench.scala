@@ -230,8 +230,8 @@ object Bench {
   }
 
   /** The VM this runs on shows up-to-7× multithreaded throughput swings in
-    * windows lasting minutes (host-level noise; CPU/disk/GC ruled out —
-    * tools/ProfileWrite; noise only ever SLOWS a run, so min-per-level is a
+    * windows lasting minutes (host-level noise; CPU/disk/GC ruled out;
+    * noise only ever SLOWS a run, so min-per-level is a
     * consistent estimator of the true time). Runs at the two levels are
     * INTERLEAVED (N,4N,N,4N,…) so both sample the same noise windows, and the
     * best run per level is reported.

@@ -115,7 +115,8 @@ object Jpx {
 
   // ---------- JP2 box container (Annex I) ----------
 
-  private val JP2Sig = Array[Byte](0, 0, 0, 12, 0x6A, 0x50, 0x20, 0x20,
+  /** The 12-byte JP2 signature box (ISO 15444-1 I.5.1). */
+  private[kernel] val JP2Sig = Array[Byte](0, 0, 0, 12, 0x6A, 0x50, 0x20, 0x20,
     0x0D, 0x0A, 0x87.toByte, 0x0A)
 
   /** Validate a JP2 container: signature, `ftyp` brand, box walk to `jp2c`;

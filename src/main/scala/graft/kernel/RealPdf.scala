@@ -19,8 +19,21 @@ package graft.kernel
   */
 object RealPdf {
 
-  /** Where the reference corpus lives (read-only). */
-  val Dir = "/root/reference"
+  /** Where the reference corpus lives (read-only): `GRAFT_REFERENCE_DIR`,
+    * default `/root/reference`. */
+  val Dir: String = sys.env.getOrElse("GRAFT_REFERENCE_DIR", "/root/reference")
+
+  /** [[Dir]], checked: fails with one line when the corpus is absent. */
+  def dir: java.nio.file.Path = {
+    val d = java.nio.file.Paths.get(Dir)
+    if (!java.nio.file.Files.isDirectory(d))
+      throw new java.io.FileNotFoundException(
+        s"real-PDF corpus not found at $Dir (set GRAFT_REFERENCE_DIR)")
+    d
+  }
+
+  /** A file of the reference corpus (see [[dir]]). */
+  def file(name: String): java.nio.file.Path = dir.resolve(name)
 
   /** `vendor_templates.json` "newark" `table_box` [x1, y1, x2, y2]. */
   val TableBox: Vector[Int] = Vector(35, 290, 1609, 1099)

@@ -727,7 +727,7 @@ object ExtractOps {
   def q51RealPdfBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.PdfTableGridExpr.pdfTableGrid
     val pages = spark.read.format("binaryFile")
-      .load(graft.kernel.RealPdf.Dir + "/*_page*.pdf")
+      .load(graft.kernel.RealPdf.dir.toString + "/*_page*.pdf")
       .select(col("path"), pdfTableGrid(col("content")).as("f"))
       .select(col("path"),
         col("f.n_items").as("n_items"), col("f.in_box").as("in_box"),

@@ -20,23 +20,30 @@ import graft.kernel._
   *
   *  - '''Exactly-once resumability''': output parquet is partitioned by
   *    `bucket = xxhash64(url) pmod nBuckets` (deterministic, input-only).
-  *    Lineage rows (runId, bucket, docs, bytes, failures) are appended ONLY
-  *    after the data write commits; `partitionOverwriteMode=dynamic` means a
-  *    re-run replaces exactly the buckets it recomputes. Restart = anti-join
-  *    input buckets against committed lineage — no dup, no loss, verified by
-  *    the kill/rerun spec.
+  *    The docs write reports the per-bucket stats of the rows it committed
+  *    ([[TableIO.commitDocs]]: an observation on the write itself, no
+  *    re-scan of the table), and the lineage rows (runId, bucket, docs,
+  *    bytes, failures, emptyDocs) built from them are appended ONLY after
+  *    that commit returns; `partitionOverwriteMode=dynamic` means a re-run
+  *    replaces exactly the buckets it recomputes. Restart = anti-join input
+  *    buckets against committed lineage — no dup, no loss, verified by the
+  *    kill/rerun spec.
   *
-  *  - '''Metrics''': docs/bytes/failure-taxonomy from the per-bucket lineage
-  *    rows (durable, race-free: a doc is counted iff its bucket committed;
-  *    the rollup is a columnar scan of the run's own lineage, O(nBuckets)).
+  *  - '''Metrics''': docs/bytes/failure-taxonomy summed from the same
+  *    committed per-bucket stats the lineage rows carry (a doc is counted iff
+  *    the write that committed it succeeded; O(nBuckets) on the driver).
   *
   * At 10^12 docs this layout holds: nBuckets scales to O(10^5) (lineage stays
   * tiny), numPartitions to O(cores×4); nothing here collects data to the
-  * driver except the bucket-id set (bounded by nBuckets).
+  * driver beyond O(nBuckets): the committed bucket-id set and the per-bucket
+  * stats.
   */
 object ExtractJob {
 
-  final case class Lineage(runId: String, bucket: Long, docs: Long, bytes: Long,
+  /** One lineage row. `bucket` is an int because that is the type the
+    * lineage files have always stored (the docs table's partition column,
+    * read back through partition discovery). */
+  final case class Lineage(runId: String, bucket: Int, docs: Long, bytes: Long,
                            failures: Long, emptyDocs: Long, status: String)
 
   final case class Metrics(docs: Long, bytes: Long, okDocs: Long, failedDocs: Long,
@@ -106,7 +113,6 @@ object ExtractJob {
     val pending =
       if (done.isEmpty) bucketed
       else bucketed.filter(!$"bucket".isin(done.toSeq: _*))
-    val pendingBuckets = (0L until nBuckets.toLong).toSet.diff(done)
 
     val prepared = saltedRepartition(pending, parts, nBuckets)
 
@@ -124,33 +130,19 @@ object ExtractJob {
       .select($"doc.*", $"bucket")
 
     // idempotent per-bucket overwrite: a recomputed bucket fully replaces its
-    // partition; untouched buckets stay
-    io.writeDocs(extracted)
+    // partition; untouched buckets stay. The write reports the per-bucket
+    // stats of exactly the rows it committed.
+    val stats = io.commitDocs(extracted)
 
-    // lineage from the WRITTEN data (cheap columnar count scan — no kernel
-    // recompute), appended only after the docs commit
-    val written = io.readDocs(spark)
-    if (pendingBuckets.nonEmpty) {
-      io.appendLineage(
-        written.filter($"bucket".isin(pendingBuckets.toSeq: _*))
-          .groupBy($"bucket")
-          .agg(count(lit(1)).as("docs"), sum($"nBytes").as("bytes"),
-            sum(when($"failure" =!= "", 1L).otherwise(0L)).as("failures"),
-            sum(when($"failure" === "" && $"nItems" === 0, 1L).otherwise(0L)).as("emptyDocs"))
-          .withColumn("runId", lit(runId))
-          .withColumn("status", lit("ok"))
-          .select("runId", "bucket", "docs", "bytes", "failures", "emptyDocs", "status"))
-    }
+    // lineage appended only after the docs commit, one row per bucket that
+    // received docs (a small local frame: O(nBuckets) rows)
+    if (stats.nonEmpty)
+      io.appendLineage(stats.map(s => Lineage(runId, s.bucket, s.docs, s.bytes,
+        s.failures, s.emptyDocs, "ok")).toDF())
 
-    // metrics from the durable lineage rows of THIS run (single source of
-    // truth; no accumulator/commit race — a row is counted iff it committed)
-    val agg = io.readLineage(spark)
-      .filter($"runId" === runId)
-      .agg(coalesce(sum($"docs"), lit(0L)), coalesce(sum($"bytes"), lit(0L)),
-        coalesce(sum($"failures"), lit(0L)), coalesce(sum($"emptyDocs"), lit(0L)))
-      .collect()(0)
     val wall = (System.nanoTime() - t0) / 1e9
-    val (d, b, f, e) = (agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3))
+    val (d, b, f, e) = (stats.map(_.docs).sum, stats.map(_.bytes).sum,
+      stats.map(_.failures).sum, stats.map(_.emptyDocs).sum)
     Metrics(d, b, d - f, f, e, wall, d / wall, b / 1e6 / wall)
   }
 }

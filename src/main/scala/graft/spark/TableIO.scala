@@ -1,6 +1,16 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{col, udaf}
+
+/** Per-bucket rollup of the rows one docs commit wrote: the counters of a
+  * lineage row. `failures` counts docs with a non-empty `failure`;
+  * `emptyDocs` counts docs with `failure = ''` and no items. */
+final case class BucketStats(bucket: Int, docs: Long, bytes: Long,
+                             failures: Long, emptyDocs: Long)
 
 /** Storage abstraction for the extraction job's two tables (docs + lineage).
   *
@@ -11,6 +21,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * playing the role of snapshot metadata. A real Iceberg catalog is a
   * drop-in: implement this trait with `writeTo(table).overwritePartitions()`
   * / `append()` and the job logic above it is unchanged.
+  *
+  * The job commits docs through [[commitDocs]], which takes the per-bucket
+  * stats from the write itself (Iceberg likewise takes partition stats from
+  * the commit's metadata, not from a re-scan). Any decorator that changes
+  * HOW docs commit — a fallback target, a retry, a second write of the same
+  * frame — must override `commitDocs` so the stats describe the write that
+  * committed; a pass-through decorator inherits the default. [[readDocs]] is
+  * off the job path: it serves inspection and tests.
   */
 trait TableIO {
   /** Idempotent bucket-partitioned write: recomputed buckets fully replace
@@ -21,6 +39,70 @@ trait TableIO {
   def readDocs(spark: SparkSession): DataFrame
   def lineageExists(spark: SparkSession): Boolean
   def readLineage(spark: SparkSession): DataFrame
+
+  /** [[writeDocs]], returning the per-bucket stats of the rows it wrote
+    * (buckets with ≥ 1 doc, ascending). The stats are observed on the write
+    * itself — no second pass over the committed table. */
+  def commitDocs(docs: DataFrame): Seq[BucketStats] =
+    TableIO.observingBuckets(docs)(writeDocs)
+}
+
+object TableIO {
+
+  /** Runs `write` over `docs` wrapped in a FRESH [[Observation]] of the
+    * per-bucket stats, and reads the observation only after `write` returns.
+    * A failed action completes its observation with empty stats and a later
+    * action does not update it, so every write attempt needs its own call. */
+  def observingBuckets(docs: DataFrame)(write: DataFrame => Unit): Seq[BucketStats] = {
+    val obs = Observation()
+    write(docs.observe(obs, bucketStatsUdaf(col("bucket").cast("long"),
+      col("nBytes").cast("long"), col("failure"), col("nItems").cast("int")).as("buckets")))
+    // observations complete through the listener bus, shortly after the
+    // action returns; one that never completes means `write` ran no action
+    // over the frame it was given
+    val row = try scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(10, "minutes"))
+    catch { case _: java.util.concurrent.TimeoutException =>
+      throw new IllegalStateException("docs write returned without running an action " +
+        "over the observed frame; no per-bucket stats to commit") }
+    row.getSeq[Row](0).map(r =>
+      BucketStats(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+  }
+
+  private type Buf = mutable.HashMap[Int, Array[Long]]
+
+  /** Sparse per-bucket (docs, bytes, failures, emptyDocs) rollup: a task's
+    * buffer holds only the buckets it saw, so what reaches the driver is
+    * O(nBuckets) per task, independent of doc count. */
+  private object BucketStatsAgg
+      extends Aggregator[(Long, Long, String, Int), Buf, Seq[BucketStats]] {
+    def zero: Buf = mutable.HashMap.empty
+    def reduce(b: Buf, in: (Long, Long, String, Int)): Buf = {
+      val s = b.getOrElseUpdate(in._1.toInt, new Array[Long](4))
+      s(0) += 1
+      s(1) += in._2
+      if (in._3 != null) {
+        if (in._3.nonEmpty) s(2) += 1
+        else if (in._4 == 0) s(3) += 1
+      }
+      b
+    }
+    def merge(x: Buf, y: Buf): Buf = {
+      y.foreach { case (k, v) =>
+        val s = x.getOrElseUpdate(k, new Array[Long](4))
+        var i = 0
+        while (i < 4) { s(i) += v(i); i += 1 }
+      }
+      x
+    }
+    def finish(b: Buf): Seq[BucketStats] =
+      b.toSeq.sortBy(_._1).map { case (k, s) => BucketStats(k, s(0), s(1), s(2), s(3)) }
+    def bufferEncoder: Encoder[Buf] = ExpressionEncoder[Buf]()
+    def outputEncoder: Encoder[Seq[BucketStats]] = ExpressionEncoder[Seq[BucketStats]]()
+  }
+
+  private lazy val bucketStatsUdaf = udaf(BucketStatsAgg, Encoders.tuple(
+    Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING, Encoders.scalaInt))
 }
 
 /** Parquet-backed TableIO (the sandbox backend). */
@@ -64,10 +146,10 @@ final class ParquetTableIO(outDir: String) extends TableIO {
   * once a CSV table committed, `readDocs` serves the UNION of the primary
   * table (projected to the same degraded flat shape) and the CSV table —
   * a resumed job may have committed some buckets to each backend across
-  * runs, and no committed bucket may vanish from reads. The job's lineage
-  * rollup — which only needs flat columns — and a later inspection read
-  * work unchanged. Lineage stays on the primary backend (the reference
-  * falls back for the table artifact only, not its bookkeeping).
+  * runs, and no committed bucket may vanish from reads. [[commitDocs]]
+  * reports the stats of whichever write committed, so the job's lineage
+  * is the same on either target. Lineage stays on the primary backend (the
+  * reference falls back for the table artifact only, not its bookkeeping).
   */
 final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableIO {
   import org.apache.spark.sql.functions._
@@ -90,30 +172,44 @@ final class CsvFallbackTableIO(primary: TableIO, csvPath: String) extends TableI
 
   override def writeDocs(docs: DataFrame): Unit =
     try primary.writeDocs(docs)
+    catch { case scala.util.control.NonFatal(e) => warnFallback(e); writeCsv(docs) }
+
+  /** The primary's stats, or — when its commit fails — those of the CSV
+    * write, observed afresh: the primary attempt's observation may already
+    * be completed by its failed action. */
+  override def commitDocs(docs: DataFrame): Seq[BucketStats] =
+    try primary.commitDocs(docs)
     catch {
       case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"primary table write failed (${e.getClass.getSimpleName}: " +
-            s"${e.getMessage}); falling back to CSV at $csvPath")
-        docs.select(col("url"), col("route"), col("vendor"), col("failure"),
-            col("nItems"), col("nPages"), col("nBytes"),
-            graft.functions.CsvGrid.column(col("cells")).as("grid_csv"),
-            col("bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          // RFC-4180 doubling (the pandas convention) for the sink's own
-          // quoting, so grid_csv's embedded quotes/newlines round-trip;
-          // the writer trims field whitespace by default, which would eat
-          // grid_csv's trailing newline — disable both trims
-          .option("escape", "\"")
-          .option("ignoreLeadingWhiteSpace", "false")
-          .option("ignoreTrailingWhiteSpace", "false")
-          .partitionBy("bucket")
-          .csv(csvPath)
-        val p = new org.apache.hadoop.fs.Path(s"$csvPath/$marker")
-        p.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-          .create(p, true).close()
+        warnFallback(e)
+        TableIO.observingBuckets(docs)(writeCsv)
     }
+
+  private def warnFallback(e: Throwable): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass)
+      .warn(s"primary table write failed (${e.getClass.getSimpleName}: " +
+        s"${e.getMessage}); falling back to CSV at $csvPath")
+
+  private def writeCsv(docs: DataFrame): Unit = {
+    docs.select(col("url"), col("route"), col("vendor"), col("failure"),
+        col("nItems"), col("nPages"), col("nBytes"),
+        graft.functions.CsvGrid.column(col("cells")).as("grid_csv"),
+        col("bucket"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      // RFC-4180 doubling (the pandas convention) for the sink's own
+      // quoting, so grid_csv's embedded quotes/newlines round-trip;
+      // the writer trims field whitespace by default, which would eat
+      // grid_csv's trailing newline — disable both trims
+      .option("escape", "\"")
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
+      .partitionBy("bucket")
+      .csv(csvPath)
+    val p = new org.apache.hadoop.fs.Path(s"$csvPath/$marker")
+    p.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
+      .create(p, true).close()
+  }
 
   override def readDocs(spark: SparkSession): DataFrame =
     if (!csvCommitted(spark)) primary.readDocs(spark)
@@ -168,6 +264,18 @@ final class XlsxArtifactTableIO(inner: TableIO, artifactDir: String) extends Tab
 
   override def writeDocs(docs: DataFrame): Unit = {
     inner.writeDocs(docs)
+    writeArtifacts(docs)
+  }
+
+  /** The stats of the inner docs commit; the artifact write that follows
+    * re-reads `docs` outside the observation. */
+  override def commitDocs(docs: DataFrame): Seq[BucketStats] = {
+    val stats = inner.commitDocs(docs)
+    writeArtifacts(docs)
+    stats
+  }
+
+  private def writeArtifacts(docs: DataFrame): Unit =
     docs
       .select(col("url"), col("vendor"), col("bucket"),
         XlsxGrid.column(col("cells")).as("xlsx"),
@@ -180,7 +288,6 @@ final class XlsxArtifactTableIO(inner: TableIO, artifactDir: String) extends Tab
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(artifactsPath)
-  }
 
   def readArtifacts(spark: SparkSession): DataFrame =
     spark.read.parquet(artifactsPath)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import graft.kernel.{PdfLite, Slicer}
+import graft.kernel.{PdfLite, RealPdf, Slicer}
 
 /** Probe: parse a REAL reference PDF (read-only) with PdfLite and dump the
   * item funnel the reference's own `single_page_debug.log` records for the
@@ -10,7 +10,7 @@ import graft.kernel.{PdfLite, Slicer}
 object ProbeRealPdf {
   def main(args: Array[String]): Unit = {
     val path = if (args.nonEmpty) args(0)
-      else "/root/reference/DRISCOLL CF ORDERS FOR THE WEEK OF SEPTEMBER 8, 2025_page1.pdf"
+      else RealPdf.file("DRISCOLL CF ORDERS FOR THE WEEK OF SEPTEMBER 8, 2025_page1.pdf").toString
     val bytes = Files.readAllBytes(Paths.get(path))
     println(s"file: $path (${bytes.length} bytes)  isPdf=${PdfLite.isPdf(bytes)}")
     val parsed = PdfLite.parseNative(bytes)

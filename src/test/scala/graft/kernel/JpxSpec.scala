@@ -99,6 +99,18 @@ class JpxSpec extends AnyFunSuite {
     assert(m.format == "jp2" && m.failure == "decode_error")
   }
 
+  test("a JP2 signature with a corrupted tail sniffs as unknown, not jp2") {
+    // bytes 8..11 of the signature box (0D 0A 87 0A) catch transfer damage
+    // (CR/LF translation, 7-bit stripping); each one alone must matter
+    for (i <- 8 until 12; flip <- Seq(0x01, 0x80)) {
+      val bad = Jpx.encodeJp2(320, 240, 3)
+      bad(i) = (bad(i) ^ flip).toByte
+      assert(Multimodal.sniff(bad) == "unknown", s"byte $i ^ $flip")
+      val m = Multimodal.decode(9L, bad)
+      assert(m.format == "unknown" && m.failure == "bad_magic", s"byte $i ^ $flip: $m")
+    }
+  }
+
   test("dialect census tags /JPXDecode as img:jpx") {
     val pdf = PdfLite.writeDoc(Seq(PdfLite.PageSpec(1700, 1200, Seq.empty)),
       scanned = true,

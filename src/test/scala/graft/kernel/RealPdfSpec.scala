@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the co-evolution loop of writer-twin corpora is broken. */
 class RealPdfSpec extends AnyFunSuite {
 
-  private val refDir = Paths.get(RealPdf.Dir)
+  private def refDir = RealPdf.dir
   private val page1Name =
     "DRISCOLL CF ORDERS FOR THE WEEK OF SEPTEMBER 8, 2025_page1.pdf"
 

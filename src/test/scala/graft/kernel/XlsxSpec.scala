@@ -1,6 +1,6 @@
 package graft.kernel
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S9 xlsx sink parity (VERDICT r04 "next round" #6): the deterministic
@@ -42,7 +42,7 @@ class XlsxSpec extends AnyFunSuite {
 
   test("reader handles the reference's own openpyxl workbook (11x16 golden)") {
     val bytes = Files.readAllBytes(
-      Paths.get(RealPdf.Dir, "test_driscoll_page.xlsx"))
+      RealPdf.file("test_driscoll_page.xlsx"))
     val cells = Xlsx.readCells(bytes, padCols = 16)
     assert(cells.length == 11)
     assert(cells.forall(_.length == 16))
@@ -53,9 +53,9 @@ class XlsxSpec extends AnyFunSuite {
 
   test("real pipeline grid == the reference's test_driscoll_page.xlsx cells") {
     val golden = Xlsx.readCells(Files.readAllBytes(
-      Paths.get(RealPdf.Dir, "test_driscoll_page.xlsx")), padCols = 16)
-    val pdf = Files.readAllBytes(Paths.get(RealPdf.Dir,
-      "DRISCOLL CF ORDERS FOR THE WEEK OF SEPTEMBER 8, 2025_page1.pdf"))
+      RealPdf.file("test_driscoll_page.xlsx")), padCols = 16)
+    val pdf = Files.readAllBytes(
+      RealPdf.file("DRISCOLL CF ORDERS FOR THE WEEK OF SEPTEMBER 8, 2025_page1.pdf"))
     val grid = RealPdf.funnel(pdf).grid
     // the golden's row 1 is pandas' numeric header row; rows 2..11 are
     // the page-1 table
@@ -63,8 +63,8 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("our workbook for the real page-1 grid reads back identically") {
-    val pdf = Files.readAllBytes(Paths.get(RealPdf.Dir,
-      "DRISCOLL CF ORDERS FOR THE WEEK OF SEPTEMBER 8, 2025_page1.pdf"))
+    val pdf = Files.readAllBytes(
+      RealPdf.file("DRISCOLL CF ORDERS FOR THE WEEK OF SEPTEMBER 8, 2025_page1.pdf"))
     val grid = RealPdf.funnel(pdf).grid
     assert(Xlsx.readCells(Xlsx.write(grid), padCols = 16) == grid)
   }

@@ -31,6 +31,20 @@ class CsvFallbackSpec extends SparkTestBase {
     override def readLineage(s: org.apache.spark.sql.SparkSession): DataFrame = inner.readLineage(s)
   }
 
+  /** Primary whose data commit fails INSIDE a Spark action over the frame
+    * it is given: the tasks run and throw, so anything observing that frame
+    * sees a completed, failed action before the fallback writes. */
+  private final class TaskFailingPrimary(dir: String) extends TableIO {
+    private val inner = new ParquetTableIO(dir)
+    override def writeDocs(docs: DataFrame): Unit =
+      docs.select(raise_error(lit("synthetic task failure (S10 drill)")))
+        .write.format("noop").mode(org.apache.spark.sql.SaveMode.Overwrite).save()
+    override def appendLineage(l: DataFrame): Unit = inner.appendLineage(l)
+    override def readDocs(s: org.apache.spark.sql.SparkSession): DataFrame = inner.readDocs(s)
+    override def lineageExists(s: org.apache.spark.sql.SparkSession): Boolean = inner.lineageExists(s)
+    override def readLineage(s: org.apache.spark.sql.SparkSession): DataFrame = inner.readLineage(s)
+  }
+
   private def tmp(): String = Files.createTempDirectory("graft_csvfb").toString
 
   test("primary failure degrades to CSV; metrics equal the healthy run") {
@@ -55,6 +69,28 @@ class CsvFallbackSpec extends SparkTestBase {
     val back = io.readDocs(spark)
     assert(back.count() == NDocs)
     assert(back.select(countDistinct(col("bucket"))).head().getLong(0) == NBuckets)
+  }
+
+  test("fallback after a failed Spark action: lineage and metrics equal the healthy run") {
+    val cleanDir = tmp(); val fbDir = tmp()
+    val pages = ExtractPipeline.pages(spark, NDocs).toDF()
+    val healthyIo = new ParquetTableIO(s"$cleanDir/t")
+    val healthy = ExtractJob.run(spark, pages, healthyIo, "clean", NBuckets, 8,
+      resume = false, Vendor.builtinTemplates)
+
+    val primary = new TaskFailingPrimary(s"$fbDir/t")
+    val io = new CsvFallbackTableIO(primary, s"$fbDir/csv")
+    val degraded = ExtractJob.run(spark, pages, io, "fb", NBuckets, 8,
+      resume = false, Vendor.builtinTemplates)
+    assert(new java.io.File(s"$fbDir/csv/_GRAFT_CSV_COMMIT").exists(), "csv commit marker")
+
+    val want = LineageOracle.rows(healthyIo.readLineage(spark))
+    assert(want.length == NBuckets && want.map(_._2).sum == NDocs)
+    assert(LineageOracle.rows(io.readLineage(spark)) == want)
+    assert(LineageOracle.counters(degraded) == LineageOracle.counters(healthy))
+    // and both equal the re-scan rollup of the committed CSV table
+    assert(LineageOracle.rows(LineageOracle.rescan(io.readDocs(spark), "fb",
+      (0L until NBuckets.toLong).toSet)) == want)
   }
 
   test("grid_csv read back from the CSV table matches the kernel renderer") {

@@ -40,6 +40,17 @@ class ExtractE2ESpec extends SparkTestBase {
     }
     // the corpus must actually exercise both payload kinds
     assert(htmlN > 100 && pdfN > 100, s"degenerate corpus: html=$htmlN pdf=$pdfN")
+
+    // lineage taken from the write equals the re-scan rollup of the
+    // committed docs, and is stored with the schema it always had
+    val lineage = spark.read.parquet(s"$out/lineage")
+    assert(lineage.schema.map(f => f.name -> f.dataType) == LineageOracle.ParquetSchema,
+      lineage.schema.treeString)
+    val want = LineageOracle.rows(LineageOracle.rescan(
+      spark.read.parquet(s"$out/docs"), "t1", (0L until 8L).toSet))
+    assert(want.length == 8)
+    assert(LineageOracle.ofRun(lineage, "t1") == want)
+    assert(LineageOracle.counters(metrics) == LineageOracle.metrics(want))
   }
 
   test("cells, spans and quality survive the parquet round-trip") {
@@ -79,6 +90,16 @@ class ExtractE2ESpec extends SparkTestBase {
     // resume: must recompute exactly the two lost buckets
     val m2 = ExtractJob.run(spark, pages, out, runId = "r2", nBuckets = 8, resume = true)
     assert(m2.docs > 0 && m2.docs < 300, s"resume recomputed ${m2.docs} docs")
+    val want2 = LineageOracle.rows(LineageOracle.rescan(
+      spark.read.parquet(s"$out/docs"), "r2", Set(2L, 5L)))
+    assert(want2.map(_._1) == Seq(2L, 5L))
+    assert(LineageOracle.ofRun(spark.read.parquet(s"$out/lineage"), "r2") == want2)
+    assert(LineageOracle.counters(m2) == LineageOracle.metrics(want2))
+
+    // a resume over the now-complete table appends nothing, counts nothing
+    val m3 = ExtractJob.run(spark, pages, out, runId = "r3", nBuckets = 8, resume = true)
+    assert(LineageOracle.counters(m3) == ((0L, 0L, 0L, 0L, 0L)))
+    assert(LineageOracle.ofRun(spark.read.parquet(s"$out/lineage"), "r3").isEmpty)
 
     val docs = spark.read.parquet(s"$out/docs").select("url").as[String].collect()
     assert(docs.length == 300, s"expected 300 docs after resume, got ${docs.length}")
@@ -87,6 +108,32 @@ class ExtractE2ESpec extends SparkTestBase {
     val d2 = spark.read.parquet(s"$out/docs")
       .filter($"bucket".isin(2L, 5L)).select("url", "extractedText").collect()
     d2.foreach { r => assert(r.getString(1) == oracle(r.getString(0)).extractedText) }
+  }
+
+  test("resume into lineage written by the re-scan rollup keeps its schema") {
+    import scala.reflect.io.Directory
+    val out = Files.createTempDirectory("graft_resume_old_lineage").toString
+    val pages = ExtractPipeline.pages(spark, 300, numPartitions = 5).toDF()
+    ExtractJob.run(spark, pages, out, runId = "r1", nBuckets = 8)
+    // replace the lineage with the files the re-scan rollup wrote for the
+    // same commit, minus two buckets whose data is also lost
+    new Directory(new java.io.File(s"$out/lineage")).deleteRecursively()
+    new Directory(new java.io.File(s"$out/docs/bucket=3")).deleteRecursively()
+    new Directory(new java.io.File(s"$out/docs/bucket=6")).deleteRecursively()
+    val kept = (0L until 8L).toSet -- Set(3L, 6L)
+    LineageOracle.rescan(spark.read.parquet(s"$out/docs"), "r1", kept)
+      .write.parquet(s"$out/lineage")
+
+    val m2 = ExtractJob.run(spark, pages, out, runId = "r2", nBuckets = 8, resume = true)
+    val lineage = spark.read.parquet(s"$out/lineage")
+    assert(lineage.schema.map(f => f.name -> f.dataType) == LineageOracle.ParquetSchema,
+      lineage.schema.treeString)
+    assert(LineageOracle.ofRun(lineage, "r1").map(_._1).toSet == kept)
+    val want = LineageOracle.rows(LineageOracle.rescan(
+      spark.read.parquet(s"$out/docs"), "r2", Set(3L, 6L)))
+    assert(LineageOracle.ofRun(lineage, "r2") == want)
+    assert(LineageOracle.counters(m2) == LineageOracle.metrics(want))
+    assert(spark.read.parquet(s"$out/docs").count() == 300L)
   }
 
   test("extract_doc rejects wrong input types at analysis time") {

@@ -57,12 +57,12 @@ class TableIOContractSpec extends SparkTestBase {
       * the given buckets, as if the job died before their lineage append. */
     def dropLineageFor(buckets: Set[Long]): Unit = {
       val bIdx = lineageSchema.fieldIndex("bucket")
-      val kept = lineageRows.filterNot(r => buckets(r.getLong(bIdx)))
+      val kept = lineageRows.filterNot(r => buckets(r.getAs[Number](bIdx).longValue))
       lineageRows.clear(); lineageRows ++= kept
     }
     def lineageBuckets: Set[Long] = {
       val bIdx = lineageSchema.fieldIndex("bucket")
-      lineageRows.map(_.getLong(bIdx)).toSet
+      lineageRows.map(_.getAs[Number](bIdx).longValue).toSet
     }
   }
 
@@ -81,6 +81,34 @@ class TableIOContractSpec extends SparkTestBase {
     assert(m.docs == NDocs && io.docCount == NDocs)
     assert(io.lineageBuckets == io.partitions, "lineage must mirror committed partitions")
     assert(io.commits.length == 1)
+    // the rows equal the re-scan rollup of what the catalog committed
+    val want = LineageOracle.rows(LineageOracle.rescan(
+      io.readDocs(spark), "run-1", (0L until NBuckets.toLong).toSet))
+    assert(LineageOracle.ofRun(io.readLineage(spark), "run-1") == want)
+    assert(LineageOracle.counters(m) == LineageOracle.metrics(want))
+  }
+
+  test("commitDocs stats equal the re-scan rollup over failures, empty and null rows") {
+    import spark.implicits._
+    val rows = (0 until 240).map { i =>
+      val failure = i % 7 match {
+        case 0 => "parse_error"
+        case 1 => null // neither a failure nor an empty doc, as in SQL
+        case _ => ""
+      }
+      (s"u$i", failure, if (i % 3 == 0) 0 else i % 5, (i * 37 % 1000).toLong, (i % 9).toLong)
+    }
+    val docs = rows.toDF("url", "failure", "nItems", "nBytes", "bucket").repartition(6)
+    val dir = java.nio.file.Files.createTempDirectory("graft_commit_stats").toString
+    val io = new ParquetTableIO(dir)
+    val stats = io.commitDocs(docs)
+    val want = LineageOracle.rows(LineageOracle.rescan(io.readDocs(spark), "x",
+      (0L until 9L).toSet))
+    assert(want.map(_._4).sum > 0 && want.map(_._5).sum > 0, "battery lacks failures/empties")
+    assert(stats.map(s => (s.bucket.toLong, s.docs, s.bytes, s.failures, s.emptyDocs, "ok"))
+      == want)
+    // a write of nothing reports nothing
+    assert(io.commitDocs(docs.filter($"bucket" > 100L)).isEmpty)
   }
 
   test("non-resume rerun into a committed table is refused") {
@@ -94,6 +122,9 @@ class TableIOContractSpec extends SparkTestBase {
     freshRun(io, "run-1")
     val m2 = freshRun(io, "run-2", resume = true)
     assert(m2.docs == 0, "fully-committed table must yield an empty resume")
+    assert(LineageOracle.counters(m2) == ((0L, 0L, 0L, 0L, 0L)))
+    assert(LineageOracle.ofRun(io.readLineage(spark), "run-2").isEmpty,
+      "an empty resume appends no lineage rows")
     assert(io.docCount == NDocs, "resume must not duplicate docs")
     // the second writeDocs call carried no partitions
     assert(io.commits.length == 2 && io.commits(1).isEmpty, io.commits)
@@ -112,8 +143,14 @@ class TableIOContractSpec extends SparkTestBase {
     // idempotent either way; here the data exists, the worst case for dup)
     val lost = io.lineageBuckets.take(5)
     io.dropLineageFor(lost)
+    val pending = (0L until NBuckets.toLong).toSet -- io.lineageBuckets
     val m2 = freshRun(io, "run-2", resume = true)
     assert(m2.docs > 0)
+    val wantLineage = LineageOracle.rows(LineageOracle.rescan(
+      io.readDocs(spark), "run-2", pending))
+    assert(wantLineage.map(_._1).toSet == lost)
+    assert(LineageOracle.ofRun(io.readLineage(spark), "run-2") == wantLineage)
+    assert(LineageOracle.counters(m2) == LineageOracle.metrics(wantLineage))
     // the resume commit replaced exactly the lost partitions (empty input
     // buckets may ride along as no-ops, but no COMMITTED partition recomputes)
     val replayed = io.commits(1)

@@ -18,8 +18,13 @@ class XlsxArtifactSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft_xlsx_art").toString
     val pages = ExtractPipeline.pages(spark, NDocs).toDF()
     val io = new XlsxArtifactTableIO(new ParquetTableIO(s"$dir/t"), s"$dir/a")
-    ExtractJob.run(spark, pages, io, "xa", NBuckets, 8,
+    val m = ExtractJob.run(spark, pages, io, "xa", NBuckets, 8,
       resume = false, Vendor.builtinTemplates)
+    // the lineage describes the docs commit, not the artifact write after it
+    val want = LineageOracle.rows(LineageOracle.rescan(io.readDocs(spark), "xa",
+      (0L until NBuckets.toLong).toSet))
+    assert(LineageOracle.ofRun(io.readLineage(spark), "xa") == want)
+    assert(LineageOracle.counters(m) == LineageOracle.metrics(want))
 
     val arts: Map[String, (String, Array[Byte])] = io.readArtifacts(spark)
       .select("url", "format", "artifact").collect()
